@@ -523,6 +523,30 @@ def _read_key_column_driver(paths: list[str], col: str) -> list | None:
     return list(vals)
 
 
+def _in_list_predicate(col: str, values: list):
+    """``col IN (values)`` as ONE SQL expression text, so building it costs
+    O(1) py4j calls — ``Column.isin`` makes a JVM round trip per literal,
+    so its build time grows with the churn-key count. ``values`` are the types
+    :func:`_read_key_column_driver` admits (non-bool int, str, None), each
+    rendered as the literal ``F.lit`` would make: an int32-range integer
+    as INT, a wider one as BIGINT, a string as ``CAST(X'<utf-8 hex>' AS
+    STRING)`` (exact for any content under any string-escaping conf), and
+    None as NULL — so the predicate, its NULL semantics and the pushed
+    parquet filter are the ones ``isin`` builds. The column name is
+    backtick-quoted."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    def literal(v) -> str:
+        if v is None:
+            return "NULL"
+        if isinstance(v, str):
+            return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+
+    quoted = "`" + col.replace("`", "``") + "`"
+    return F.expr(f"{quoted} IN ({', '.join(map(literal, values))})")
+
+
 _BLOOMS_DIR = "_blooms"
 
 
@@ -3493,6 +3517,9 @@ def _feed_segment(
         except TypeError:
             return True
 
+    # built once for both sides: one expression text, not one py4j call per key
+    key_in = _in_list_predicate(key_col, raw_keys) if use_isin else None
+
     # local aliases: these inner helpers are DRIVER-side plan construction,
     # but the by-value-registration audit cannot tell a driver closure from
     # a worker closure — binding locally satisfies it and costs nothing
@@ -3518,7 +3545,7 @@ def _feed_segment(
             # literal In over the churn keys: pushes to the parquet scan
             # and skips the broadcast build; NULL state keys drop under
             # both forms (neither In nor a semi-join matches NULL)
-            return state.filter(F.col(key_col).isin(raw_keys))
+            return state.filter(key_in)
         nonlocal keys_df
         if keys_df is None:
             keys_df = spark.createDataFrame(

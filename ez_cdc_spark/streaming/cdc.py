@@ -433,12 +433,21 @@ def upsert_batch(state_dir: str, n_buckets: int = 16):
 
     State lives as parquet hash-partitioned by ``bucket = pmod(xxhash64(id),
     n_buckets)``. Each micro-batch:
-      1. dedupe batch on lsn (at-least-once collapse, T5 semantics),
-      2. reduce batch to latest image per key,
-      3. merge with ONLY the state buckets the batch touches (partition
-         pruning on the bucket column), keep max-lsn row per key,
-      4. drop keys whose final op is 'd'; dynamic partition overwrite
-         rewrites only the touched bucket dirs.
+      1. projects its envelopes to keyed change rows (id, op, lsn, after,
+         bucket) and persists them for the two actions below,
+      2. reads ONLY the state buckets the batch touches (partition pruning
+         on the bucket column, with the batch's own schema — no footer
+         inference),
+      3. shuffles state ∪ changes ONCE, hash-partitioned on ``bucket``,
+         and keeps the max-lsn row per (bucket, id). This per-key
+         reduction is also the at-least-once collapse: a re-sent envelope
+         repeats its key AND its lsn, so it folds into the same maximum,
+         while distinct keys that share an lsn all survive. A bucket lands
+         in exactly one task, and the grouping order (bucket, id) already
+         satisfies the writer's bucket ordering, so each touched bucket is
+         written as one file with no extra sort,
+      4. drops keys whose final op is 'd' and swaps only the touched
+         bucket dirs into place (_swap_bucket_dirs).
 
     Incremental-by-bucket is what makes this hold at 100 TB: a batch that
     touches 1% of the key space reads and rewrites ~1% of the state, not
@@ -447,8 +456,10 @@ def upsert_batch(state_dir: str, n_buckets: int = 16):
     pinned by tests/test_cdc_goldens.py::
     test_upsert_state_growth_stays_bucket_bounded: at n_buckets=64 with a
     10k-key state, a 6-key batch rewrites at most 6 bucket dirs (verified
-    by mtime), so per-batch work tracks batch size, not state size. At scale the same logic targets
-    a MERGE-capable table format; this parquet layout is the
+    by mtime), so per-batch work tracks batch size, not state size. The
+    per-batch job count and the one-file-per-bucket layout are pinned by
+    test_upsert_job_budget_and_one_file_per_bucket. At scale the same
+    logic targets a MERGE-capable table format; this parquet layout is the
     dependency-free equivalent with identical semantics (SURVEY §4.2 'the
     one genuinely custom physical operator').
     """
@@ -466,63 +477,47 @@ def upsert_batch(state_dir: str, n_buckets: int = 16):
                 F.col("source.lsn").alias("lsn"),
                 F.col("after"),
             )
-            .dropDuplicates(["lsn"])  # at-least-once dedup
             # keyless envelopes (no after AND no before image) are malformed
             # under REPLICA IDENTITY FULL — never let them form a null-PK row
             .filter(F.col("id").isNotNull())
-        )
-        w_latest = F.expr(
-            "max_by(struct(lsn, op, after), lsn)"
-        )  # latest change per key in this batch
-        latest = (
-            changes.groupBy("id")
-            .agg(w_latest.alias("ch"))
-            .select(
-                "id",
-                F.col("ch.lsn").alias("lsn"),
-                F.col("ch.op").alias("op"),
-                F.col("ch.after").alias("after"),
-                bucket_of.alias("bucket"),
-            )
+            .withColumn("bucket", bucket_of)
         )
         # Optimization r19 (guide §5 caching): the touched-bucket collect
-        # and the merge write below both execute the batch's
-        # dedupe+resolve pipeline; it is micro-batch-sized, so persist it
-        # for the two actions instead of running the JSON decode + two
-        # aggregations twice per trigger.
-        latest = latest.persist()
+        # and the merge write below both read the batch; it is
+        # micro-batch-sized, so persist it instead of running the JSON
+        # decode twice per trigger.
+        changes = changes.persist()
         try:
             # buckets this batch touches — bounded by n_buckets, tiny collect
             touched = sorted(
-                r["bucket"] for r in latest.select("bucket").distinct().collect()
+                r["bucket"] for r in changes.select("bucket").distinct().collect()
             )
             cur_path = os.path.join(state_dir, "current")
             if os.path.exists(os.path.join(cur_path, "_SUCCESS")):
-                cur = spark.read.parquet(cur_path).filter(
-                    F.col("bucket").isin(touched)  # partition-pruned read
+                cur = (
+                    spark.read.schema(changes.schema)
+                    .parquet(cur_path)
+                    .filter(F.col("bucket").isin(touched))  # partition-pruned read
                 )
             else:
-                cur = latest.limit(0)
+                cur = changes.limit(0)
             merged = (
-                cur.unionByName(latest)
-                .groupBy("id")
-                .agg(
-                    F.expr("max_by(struct(lsn, op, after, bucket), lsn)").alias(
-                        "ch"
-                    )
-                )
+                cur.unionByName(changes)
+                .repartition("bucket")
+                .groupBy("bucket", "id")
+                .agg(F.expr("max_by(struct(lsn, op, after), lsn)").alias("ch"))
                 .select(
                     "id",
                     F.col("ch.lsn").alias("lsn"),
                     F.col("ch.op").alias("op"),
                     F.col("ch.after").alias("after"),
-                    F.col("ch.bucket").alias("bucket"),
+                    "bucket",
                 )
                 .filter(F.col("op") != "d")
             )
             _swap_bucket_dirs(spark, merged, cur_path, touched, str(batch_id))
         finally:
-            latest.unpersist()
+            changes.unpersist()
         open(marker, "w").close()
 
     return apply

@@ -32,6 +32,18 @@ def _shard_workers() -> int:
         return 1
 
 
+def _driver_mem_each(workers: int) -> str:
+    """Each shard's share of physical memory as a driver heap: half the
+    RAM split across the shards (the other half covers JVM off-heap,
+    the Python processes and the page cache), at least 1 GiB. Four
+    shards at the session's 8g default overcommit a 16 GB host."""
+    try:
+        phys_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    except (AttributeError, ValueError, OSError):
+        return "8g"
+    return f"{max(1024, phys_mib // (2 * workers))}m"
+
+
 def pytest_collection_modifyitems(config, items):
     shard = os.environ.get("EZ_CDC_PYTEST_SHARD")
     if not shard:
@@ -63,12 +75,14 @@ def pytest_runtestloop(session):
 
     args = list(session.config.invocation_params.args)
     cpus_each = str(max(4, (os.cpu_count() or 32) // workers))
+    mem_each = _driver_mem_each(workers)
     procs = []
     for i in range(workers):
         env = dict(os.environ)
         env["EZ_CDC_PYTEST_SHARD"] = f"{i}/{workers}"
+        # a preset SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM wins
         env.setdefault("SPARK_GRAFT_CPUS", cpus_each)
-        env["SPARK_GRAFT_CPUS"] = cpus_each
+        env.setdefault("SPARK_GRAFT_DRIVER_MEM", mem_each)
         out = tempfile.NamedTemporaryFile(
             mode="w+", prefix=f"pytest-shard{i}-", suffix=".log", delete=False
         )

@@ -393,6 +393,92 @@ def test_upsert_state_growth_stays_bucket_bounded(spark, tmp_path):
     assert got == {k: f"new{k}" for k in keys}  # updates applied, delete gone
 
 
+def _flat_batch(spark, rows):
+    """A micro-batch in the minimal envelope shape upsert_batch reads."""
+    return spark.createDataFrame(
+        rows,
+        "before struct<id:bigint>, after struct<id:bigint, val:string>, "
+        "op string, source struct<lsn:bigint>",
+    )
+
+
+def test_upsert_keeps_distinct_keys_sharing_an_lsn(spark, tmp_path):
+    """The at-least-once collapse is per (key, lsn), not per lsn: five
+    snapshot reads of different keys stamped with one lsn all survive,
+    while a verbatim re-sent envelope still folds into its original —
+    in its own batch and when re-sent behind a newer change."""
+    state = str(tmp_path / "state")
+    apply = upsert_batch(state, n_buckets=4)
+    reads = [(None, {"id": i, "val": f"v{i}"}, "r", {"lsn": 777}) for i in range(5)]
+    apply(_flat_batch(spark, reads + [reads[2]]), 0)
+    cur = os.path.join(state, "current")
+
+    def state_rows():
+        return sorted(
+            (r["id"], r["lsn"], r["after"]["val"])
+            for r in spark.read.parquet(cur).collect()
+        )
+
+    assert state_rows() == [(i, 777, f"v{i}") for i in range(5)]
+    update = (None, {"id": 1, "val": "new"}, "u", {"lsn": 800})
+    apply(_flat_batch(spark, [update, reads[1], reads[3]]), 1)
+    assert state_rows() == [
+        (0, 777, "v0"), (1, 800, "new"), (2, 777, "v2"), (3, 777, "v3"), (4, 777, "v4")
+    ]
+
+
+def test_upsert_job_budget_and_one_file_per_bucket(spark, tmp_path):
+    """Per-batch cost and layout of the T9 merge. A non-replayed batch over
+    an existing state runs a pinned number of Spark jobs (a change may
+    lower the pin, never raise it), a replayed batch id runs none, and
+    every bucket dir holds exactly one parquet file. Coalescing is off so
+    the merge shuffle keeps its full width: a bucket spread over several
+    tasks would then show up as several files."""
+    import glob
+
+    sc = spark.sparkContext
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    state = str(tmp_path / "state")
+    apply = upsert_batch(state, n_buckets=16)
+
+    def jobs_of(df, batch_id, tag):
+        group = f"upsert-budget-{tag}-{os.getpid()}"
+        sc.setJobGroup(group, "upsert job budget")
+        try:
+            apply(df, batch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        apply(
+            _flat_batch(
+                spark,
+                [(None, {"id": i, "val": f"v{i}"}, "c", {"lsn": i}) for i in range(2_000)],
+            ),
+            0,
+        )
+        changes = _flat_batch(
+            spark,
+            [(None, {"id": i, "val": f"u{i}"}, "u", {"lsn": 10_000 + i}) for i in range(0, 2_000, 7)]
+            + [({"id": 5}, None, "d", {"lsn": 20_000})]
+            + [(None, {"id": 3_000, "val": "n"}, "c", {"lsn": 20_001})],
+        )
+        assert jobs_of(changes, 1, "apply") <= 5
+        assert jobs_of(changes, 1, "replay") == 0
+    finally:
+        spark.conf.set(key, saved)
+    cur = os.path.join(state, "current")
+    dirs = glob.glob(os.path.join(cur, "bucket=*"))
+    assert len(dirs) == 16
+    files = {os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet"))) for d in dirs}
+    assert set(files.values()) == {1}, files
+    got = {r["id"]: r["after"]["val"] for r in spark.read.parquet(cur).collect()}
+    assert len(got) == 2_000 and 5 not in got
+    assert got[7] == "u7" and got[8] == "v8" and got[3_000] == "n"
+
 def test_t13_aggregate_maintenance_incremental_and_idempotent(spark, tmp_path):
     """T13 design-for-100x check: the maintained per-domain aggregate (a)
     equals a recompute from final state after every batch, (b) rewrites

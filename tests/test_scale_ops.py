@@ -4322,6 +4322,46 @@ def test_s36b_mor_feed_composition_pruning_and_fold_guard(spark):
         change_feed_mor(spark, td, 3, 7)
 
 
+
+def test_s36b_mor_feed_key_predicate_matches_isin(spark, tmp_path):
+    """The MOR feed restricts both resolves to the churn keys with ONE SQL
+    expression text (_in_list_predicate) instead of a per-key ``isin``.
+    Over parquet, under column names that need quoting, it must select
+    exactly the rows ``isin`` selects: strings with quotes, backslashes,
+    backticks, newlines and non-ASCII; integers at the INT and BIGINT
+    edges; and a NULL in the key list (matches nothing, as in ``isin``)."""
+    from pyspark.sql import functions as F  # noqa: N812
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from ez_cdc_spark.sources.manifest import _in_list_predicate
+
+    s_col, n_col = "we`ird 'k\\ey", "n.k`"
+    strs = [
+        "plain", "it's", 'say "hi"', "back\\slash", "\\'", "tick`s`", "`",
+        "ünïcödé €", "日本", "", "new\nline", "tab\t", "%_like", "'; DROP",
+    ]
+    ints = [0, 1, -1, 2**31 - 1, 2**31, -(2**31), -(2**31) - 1, 2**63 - 1, -(2**63), 42]
+    rows = list(zip(strs + ["other", None], ints + [7, None, 8, 9, 10, 11]))
+    schema = StructType(
+        [StructField(s_col, StringType()), StructField(n_col, LongType())]
+    )
+    path = str(tmp_path / "keys")
+    spark.createDataFrame(rows, schema).write.parquet(path)
+    df = spark.read.parquet(path)
+
+    def got(pred):
+        return sorted(df.filter(pred).collect(), key=repr)
+
+    for col, keys in (
+        (s_col, strs + [None]),
+        (s_col, ["it's", "`", "missing", None]),
+        (n_col, ints + [None]),
+        (n_col, [2**31, -(2**63), 2**63 - 1, -(2**31) - 1, 123]),
+    ):
+        want = got(F.col(f"`{col.replace('`', '``')}`").isin(keys))
+        assert want, col
+        assert got(_in_list_predicate(col, keys)) == want, (col, keys)
+
 def test_s36c_partitioned_mor_moves_folds_and_differential(spark):
     """Partitioned MOR contract: the GLOBAL equality-delete kills a moved
     key's old row in its ORIGINAL partition (a partition-scoped delete
